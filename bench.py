@@ -190,6 +190,21 @@ def spread_map(all_runs: dict[str, list[float]]) -> dict[str, float]:
     return out
 
 
+def write_json_atomic(path: str, payload: dict) -> None:
+    """Write ``payload`` as JSON to a temp file beside ``path``, then
+    rename it into place: a run killed mid-write leaves the previous
+    file whole instead of a truncated one."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(payload, fh)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -436,14 +451,13 @@ def main() -> None:
     # must not clobber the last full map.
     if not selected:
         try:
-            with open(
+            write_json_atomic(
                 os.path.join(
                     os.path.dirname(os.path.abspath(__file__)),
                     "BENCH_LAST.json",
                 ),
-                "w",
-            ) as fh:
-                json.dump(payload, fh)
+                payload,
+            )
         except Exception:  # noqa: BLE001
             pass
     print(json.dumps(payload))

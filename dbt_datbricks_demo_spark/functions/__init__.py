@@ -62,13 +62,20 @@ def literal_df(spark, rows, schema: str):
     types, their commas would split wrong); ``rows`` is a list of tuples
     of plain Python scalars (int/float/str/bool — the types Column
     literals accept). An empty ``rows`` falls back to createDataFrame
-    (one empty relation, nothing to unpickle).
+    (one empty relation, nothing to unpickle). A row whose arity differs
+    from the schema's raises ``ValueError``.
     """
     from pyspark.sql import functions as _F
 
     if not rows:
         return spark.createDataFrame([], schema)
     fields = [f.strip().rsplit(None, 1) for f in schema.split(",")]
+    for i, row in enumerate(rows):
+        if len(row) != len(fields):
+            raise ValueError(
+                f"literal_df row {i} has {len(row)} values, "
+                f"schema {schema!r} has {len(fields)} fields"
+            )
     structs = [
         _F.struct(*[
             _F.lit(v).cast(t).alias(n)

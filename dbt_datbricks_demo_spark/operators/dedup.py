@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark.functions import literal_df
 from dbt_datbricks_demo_spark.operators.text import tokens
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, the minhash permutation field
@@ -683,9 +684,9 @@ def candidate_hash_arrays(
     # byte-based coalescing; §3.1: broadcast decisions off estimates
     # are wrong after checkpoints — hint explicitly). `pairs` is
     # checkpointed by contract, so the count is a metadata-cheap job;
-    # cand_ids ≤ 2·|pairs| rows of one bigint.
+    # cand_ids ≤ 2·|pairs| rows of one bigint, so that bound is guarded.
     cand = cand_ids
-    if pairs.count() <= BROADCAST_PAIR_LIMIT:
+    if 2 * pairs.count() <= BROADCAST_PAIR_LIMIT:
         cand = F.broadcast(cand_ids)
     subset = df.join(cand, on=id_col, how="left_semi")
     # Row-level codegen form (round 12): the previous with_shingle_hashes
@@ -1340,17 +1341,10 @@ def planted_recall_cert(
     # stage with zero input in EVERY cert-attaching query (guide §4:
     # don't cross the Python boundary for constants). inline() of a
     # literal struct array stays in whole-stage codegen.
-    params = rows.sparkSession.range(1).select(
-        F.inline(
-            F.array(*[
-                F.struct(
-                    F.lit(i).cast("int").alias("_i"),
-                    F.lit(a).cast("long").alias("_a"),
-                    F.lit(b).cast("long").alias("_b"),
-                )
-                for i, (a, b) in enumerate(_affine_params(num_hashes))
-            ])
-        )
+    params = literal_df(
+        rows.sparkSession,
+        [(i, a, b) for i, (a, b) in enumerate(_affine_params(num_hashes))],
+        "_i int, _a long, _b long",
     )
     mins = (
         rows.join(F.broadcast(params))

@@ -18,6 +18,12 @@ that is executor-distributed RocksDB territory, and the practical
 alternative is watermarked dedup (bounded horizon) + a periodic batch
 compaction — both expressible here by adding withWatermark before the
 dropDuplicates.
+
+Partitioning note: the dedup state store has ``spark.sql.shuffle.partitions``
+partitions, and every stage of a micro-batch runs that many tasks (AQE does
+not coalesce micro-batch plans). The session default is the core count
+(session.py). The count is fixed when a checkpoint is first started: a
+restart restores it from the offset log, whatever the session now says.
 """
 
 from __future__ import annotations

@@ -360,3 +360,21 @@ def test_bench_spread_excludes_cold_first_run():
     assert s["cold_then_stable"] == 1.05
     assert s["genuinely_unstable"] == 3.0
     assert s["two_runs"] == 2.0
+
+
+def test_bench_last_written_atomically(tmp_path):
+    """BENCH_LAST.json is replaced whole: a failed write leaves the
+    previous file intact and no temp file behind."""
+    import json
+
+    import pytest
+
+    import bench
+
+    path = tmp_path / "BENCH_LAST.json"
+    bench.write_json_atomic(str(path), {"value": 1.0, "n": 3})
+    assert json.loads(path.read_text()) == {"value": 1.0, "n": 3}
+    with pytest.raises(TypeError):
+        bench.write_json_atomic(str(path), {"value": object()})
+    assert json.loads(path.read_text()) == {"value": 1.0, "n": 3}
+    assert [p.name for p in tmp_path.iterdir()] == ["BENCH_LAST.json"]

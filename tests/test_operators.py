@@ -1719,3 +1719,15 @@ def test_adc_delivery_paths_identical(spark, tmp_path, monkeypatch):
     join_rows = run()  # forced broadcast-join path
     assert lit_rows == join_rows
     assert lit_rows  # non-vacuous
+
+
+def test_literal_df_rejects_wrong_arity(spark):
+    from dbt_datbricks_demo_spark.functions import literal_df
+
+    got = literal_df(spark, [(1, "a"), (2, "b")], "k int, v string").collect()
+    assert [(r.k, r.v) for r in got] == [(1, "a"), (2, "b")]
+    # a short or long row used to be truncated or padded silently by zip
+    with pytest.raises(ValueError, match="row 1 has 1 values"):
+        literal_df(spark, [(1, "a"), (2,)], "k int, v string")
+    with pytest.raises(ValueError, match="row 0 has 3 values"):
+        literal_df(spark, [(1, "a", 0.5)], "k int, v string")

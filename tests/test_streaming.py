@@ -219,6 +219,58 @@ def test_streaming_corpus_dedup_across_batches(spark, tmp_path):
     assert got2 == {1, 3, 7}  # 6 deduped against batch-1 state
 
 
+def test_streaming_corpus_checkpoint_keeps_state_partitions(spark, tmp_path):
+    """A checkpoint started under one shuffle-partition count keeps it
+    when the session default changes: the restart restores the count
+    from the offset log, so re-delivered texts still meet their dedup
+    state and the state store keeps its original partitions."""
+    from dbt_datbricks_demo_spark.streaming.corpus import (
+        corpus_stream_cleaned,
+        read_document_stream,
+        write_corpus_append,
+    )
+
+    input_dir = tmp_path / "docs_in"
+    input_dir.mkdir()
+    out, ckpt = tmp_path / "corpus_out", tmp_path / "corpus_ckpt"
+    en = "the quick brown fox and the lazy dog of the morning is here"
+    de = "der schnelle braune fuchs und der faule hund ist heute da"
+    fr = "le renard brun rapide saute par dessus le chien paresseux"
+
+    def run(partitions: str):
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        stream = read_document_stream(spark, str(input_dir))
+        q = (
+            write_corpus_append(corpus_stream_cleaned(stream), str(out), str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return [r["text"] for r in spark.read.parquet(str(out)).collect()]
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        (input_dir / "b1.jsonl").write_text(
+            f'{{"doc_id": 1, "text": "{en}"}}\n'
+            f'{{"doc_id": 2, "text": "{en}"}}\n'
+            f'{{"doc_id": 3, "text": "{de}"}}\n'
+            f'{{"doc_id": 4, "text": "too short"}}\n'
+        )
+        assert sorted(run("8")) == sorted([en, de])
+        # batch 2 re-delivers both admitted texts and the gated one
+        (input_dir / "b2.jsonl").write_text(
+            f'{{"doc_id": 5, "text": "{de}"}}\n'
+            f'{{"doc_id": 6, "text": "{en}"}}\n'
+            f'{{"doc_id": 7, "text": "too short"}}\n'
+            f'{{"doc_id": 8, "text": "{fr}"}}\n'
+        )
+        assert sorted(run("4")) == sorted([en, de, fr])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    state_parts = [p for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit()]
+    assert len(state_parts) == 8
+
+
 def test_streaming_corpus_neardup_across_batches(spark, tmp_path):
     """Cross-batch NEAR-dup ingestion: a later batch's minor edit of an
     admitted document is dropped via the persistent signature store,
